@@ -424,12 +424,15 @@ def _psi(ce, ca):
 def check_psi(con, out, train_src):
     """PSI recomputed from the written scores against the expected
     cohort's points-sum scores, over the monitor's score bins; and
-    PSI(expected, expected) = 0."""
+    PSI(expected, expected) = 0. A NaN score (a row with an unseen
+    category) is counted in the top bin, where the program's comparison
+    chain puts it; that no such row should be in a score bin at all is
+    checked on the probe's fixed cohort (check_probe_psi)."""
     splits = out["psi_splits"]
     sc = out["scorecard"]
 
     def hist(scores):
-        # a NaN score compares false with every split: the last bin
+        # NaN sorts after every number here, as in Spark: the top bin
         b = np.searchsorted(np.asarray(splits, dtype=float), scores,
                             side="right")
         return np.bincount(b, minlength=len(splits) + 1).astype(float)
@@ -458,15 +461,12 @@ def check_psi(con, out, train_src):
 
 def check_sketch(con, out, sources):
     """Sketch totals exact (clean, missing and special records and events
-    per variable, over both cohorts). Each solved split's rank error
-    against the nearest candidate quantile i/maxNPrebins is reported in
-    units of eps·n but not enforced: the merged sketches exceed eps on
-    some seeds (see CHANGES.md)."""
+    per variable, over both cohorts) and every solve OPTIMAL. The splits'
+    rank guarantee is checked on the probe's fixed cohort
+    (check_probe_sketch)."""
     sk = out["sketch"]
-    eps, p = sk["eps"], sk["max_n_prebins"]
     union = " UNION ALL ".join(f"SELECT * FROM {s}" for s in sources)
     problems = []
-    worst = 0.0
     for v in sk["numeric"]:
         x = f'"{v["name"]}"'
         clean = _clean(x, [-999.0])
@@ -484,27 +484,85 @@ def check_sketch(con, out, sources):
                v["special_e"], v["special_ne"])
         if tuple(got) != tuple(want):
             problems.append(f"{v['name']} totals {got} != {want}")
-        fit = v["fit"]
-        if fit["status"] != "OPTIMAL":
-            problems.append(f"{v['name']} status {fit['status']}")
-        n = want[0]
-        for s in fit["splits"]:
-            lo, hi = con.execute(
-                f"SELECT count(*) FILTER (WHERE {x} < {_d(s)}), "
-                f"count(*) FILTER (WHERE {x} <= {_d(s)}) "
-                f"FROM ({union}) WHERE {clean}").fetchone()
-            # the split's 1-based rank range is [lo + 1, hi]
-            err = min(max(0.0, i / p * n - hi, lo + 1 - i / p * n)
-                      for i in range(1, p))
-            worst = max(worst, err / (eps * n))
+        if v["fit"]["status"] != "OPTIMAL":
+            problems.append(f"{v['name']} status {v['fit']['status']}")
     for v in sk["categorical"]:
         t, te = con.execute(f"SELECT count(*), sum(target) FROM ({union})"
                             ).fetchone()
         if (v["t_records"], v["t_event"]) != (t, te):
             problems.append(f"{v['name']} totals {v['t_records']},"
                             f"{v['t_event']} != {t},{te}")
-    return ("sketch", not problems, "; ".join(problems[:3]) or
-            f"totals exact; worst split rank error {worst:.2f} eps·n")
+        if v["status"] != "OPTIMAL":
+            problems.append(f"{v['name']} status {v['status']}")
+    return ("sketch", not problems, "; ".join(problems[:3]) or "totals exact")
+
+
+def split_rank_errors(con, source, name, splits, n, n_prebins):
+    """Each split's rank error, in records, against the nearest candidate
+    quantile i/n_prebins of the clean values of `name` in `source`: the
+    distance from the quantile's rank to the split's 1-based rank range
+    [#values < split + 1, #values <= split]."""
+    x = f'"{name}"'
+    errors = []
+    for s in splits:
+        lo, hi = con.execute(
+            f"SELECT count(*) FILTER (WHERE {x} < {_d(s)}), "
+            f"count(*) FILTER (WHERE {x} <= {_d(s)}) "
+            f"FROM {source} WHERE {_clean(x, [-999.0])}").fetchone()
+        errors.append(min(max(0.0, i / n_prebins * n - hi,
+                              lo + 1 - i / n_prebins * n)
+                          for i in range(1, n_prebins)))
+    return errors
+
+
+def check_probe_sketch(con, probe, sources):
+    """The sketch's quantile guarantee: every solved split lies within
+    eps·n records of the rank of its candidate quantile (the program
+    states that its merged GK sketches keep quantiles within eps,
+    `OptimalBinningSketch.addGrouped`)."""
+    union = "(" + " UNION ALL ".join(f"SELECT * FROM {s}" for s in sources) + ")"
+    eps, p = probe["eps"], probe["max_n_prebins"]
+    problems = []
+    worst, worst_name = 0.0, ""
+    for v in probe["sketch"]:
+        if v["status"] != "OPTIMAL":
+            problems.append(f"{v['name']} status {v['status']}")
+        errs = split_rank_errors(con, union, v["name"], v["splits"], v["n"], p)
+        for s, err in zip(v["splits"], errs):
+            if err > eps * v["n"]:
+                problems.append(f"{v['name']} split {s} is {err:.2f} records "
+                                f"from its quantile's rank "
+                                f"({err / (eps * v['n']):.2f} eps·n)")
+            if err / (eps * v["n"]) > worst:
+                worst, worst_name = err / (eps * v["n"]), v["name"]
+    return ("probe:sketch_eps", not problems, "; ".join(problems[:3]) or
+            f"worst split {worst:.2f} eps·n ({worst_name})")
+
+
+def check_probe_psi(probe):
+    """A row without a score (NaN) belongs to no score bin: the actual
+    cohort's counts over the PSI table's bins must add up to the number of
+    scored rows."""
+    binned = sum(r["count_a"] for r in probe["psi_rows"])
+    ok = abs(binned - probe["scored"]) <= COUNT_TOL
+    return ("probe:psi_unscored", ok,
+            f"{binned:.0f} rows in score bins, {probe['scored']} scored, "
+            f"{probe['unscored']} unscored")
+
+
+def run_probe_checks(result, data_dir):
+    """Checks of the score_monitor probe (a fixed cohort); [] elsewhere."""
+    out = result["outputs"]
+    if result["workload"] != "score_monitor" or "error" in out:
+        return []
+    con = duckdb.connect()
+    con.execute("SET threads TO 2")
+    srcs = [f"read_parquet('{data_dir}/probe/{t}.parquet')"
+            for t in ("train", "batch")]
+    checks = [check_probe_psi(out["probe"]),
+              check_probe_sketch(con, out["probe"], srcs)]
+    con.close()
+    return checks
 
 
 def run_checks(result, data_dir):

@@ -158,6 +158,10 @@ def main():
     n_train, n_batch = SIZES[args.workload]
     t0 = time.time()
     gen.generate(args.seed, str(data_dir), n_train, n_batch)
+    if args.workload == "score_monitor":
+        (data_dir / "probe").mkdir()
+        gen.generate(gen.PROBE_SEED, str(data_dir / "probe"),
+                     *gen.PROBE_SIZES)
     log(f"inputs generated in {time.time() - t0:.1f} s")
 
     cpus = len(os.sched_getaffinity(0))
@@ -166,16 +170,22 @@ def main():
     log("JVM finished")
     t0 = time.time()
     results = checks.run_checks(result, str(data_dir))
+    probe = checks.run_probe_checks(result, str(data_dir))
     log(f"checks took {time.time() - t0:.1f} s")
     correct = all(ok for _, ok, _ in results)
-    for name, ok, detail in results:
+    for name, ok, detail in results + probe:
         if not ok:
             log(f"CHECK FAILED {name}: {detail}")
     for e in result["errors"]:
         log(f"operation error: {e}")
     (out_dir / "checks.json").write_text(json.dumps(
-        [{"check": n, "ok": bool(ok), "detail": d} for n, ok, d in results],
-        indent=1))
+        [{"check": n, "ok": bool(ok), "detail": d}
+         for n, ok, d in results + probe], indent=1))
+    # a probe whose outputs fail their checks is a failed operation, in
+    # every round it ran (its outputs are the same in every round)
+    failed = result["failed"]
+    if not all(ok for _, ok, _ in probe):
+        failed += sum(1 for o in result["ops"] if o["op"] == "probe" and o["ok"])
 
     ops = result["e2e_traced" if args.trace else "e2e_untraced"]
     for name in OP_FIGURES:
@@ -187,26 +197,29 @@ def main():
             layers[f"op.{name}"] = ops.get(name, 0.0)
         metrics = {k: {"value": v, "unit": layer_unit(k)}
                    for k, v in sorted(layers.items())}
-        for m, v in result["e2e_untraced"].items():
+        for m in ["round_s", "cpu_s"] + OP_FIGURES:
+            v = result["e2e_untraced"].get(m)
+            if v is None:
+                continue
             over = result["e2e_traced"][m] - v
             print(f"tracing overhead {m}: {over:+.4f} s "
                   f"({100 * over / v:+.1f}% of {v:.4f} s)")
     else:
-        # the declared figures are CPU time: on a shared host wall time
-        # moves with the CPU the host steals, CPU time much less
         metrics = {
+            "round_s": {"value": ops["round_s"], "unit": "s"},
             "cpu_s": {"value": ops["cpu_s"], "unit": "s"},
             "setup_s": {"value": statistics.median(result["setup_cpu_s"]),
                         "unit": "s"}}
-        print(f"round wall = {ops['round_s']:.6g} s, fit wall = "
-              f"{ops['fit_s']:.6g} s, cold round wall = "
+        print(f"fit wall = {ops['fit_s']:.6g} s, cold round wall = "
               f"{result['cold_round_s']:.6g} s, set-up wall = "
               f"{statistics.median(result['setup_s']):.6g} s, "
+              f"JIT CPU = {ops['jit_s']:.6g} s, GC CPU = "
+              f"{ops['gc_cpu_s']:.6g} s, "
               f"peak RSS = {result['peak_rss_mb']:.6g} MiB")
     for k, m in metrics.items():
         print(f"{k} = {m['value']:.6g} {m['unit']}")
     print(json.dumps({"correct": correct, "attempted": result["attempted"],
-                      "failed": result["failed"], "metrics": metrics}))
+                      "failed": failed, "metrics": metrics}))
 
 
 def layer_unit(name):

@@ -16,6 +16,7 @@ import sys
 from pathlib import Path
 
 import duckdb
+import numpy as np
 import pyarrow.parquet as pq
 
 BENCH = Path(__file__).resolve().parent
@@ -59,6 +60,78 @@ def bump(path):
             node = node[k]
         node[path[-1]] += 1
     return corrupt
+
+
+def probe_cases(sm, data):
+    """The probe's checks fail on the program's outputs (its known
+    faults). Each must pass once the outputs are repaired to the property
+    it checks, and fail again on a corruption of the repaired outputs."""
+    con = duckdb.connect()
+    union = " UNION ALL ".join(
+        f"SELECT * FROM read_parquet('{data}/probe/{t}.parquet')"
+        for t in ("train", "batch"))
+    probe = sm["outputs"]["probe"]
+    p = probe["max_n_prebins"]
+
+    def psi_repaired(r):
+        rows = r["outputs"]["probe"]["psi_rows"]
+        top = max(rows, key=lambda row: row["bin"])
+        top["count_a"] -= r["outputs"]["probe"]["unscored"]
+
+    def psi_broken(r):
+        psi_repaired(r)
+        r["outputs"]["probe"]["psi_rows"][0]["count_a"] += 1
+
+    def sketch_repaired(r):
+        # each split replaced by the exact order statistic at the rank of
+        # its nearest candidate quantile
+        for v in r["outputs"]["probe"]["sketch"]:
+            x = f'"{v["name"]}"'
+            vals = np.sort(con.execute(
+                f"SELECT {x} FROM ({union}) WHERE {checks._clean(x, [-999.0])}"
+            ).fetchnumpy()[v["name"]])
+            n = len(vals)
+            fixed = []
+            for s in v["splits"]:
+                lo = np.searchsorted(vals, s, side="left")
+                hi = np.searchsorted(vals, s, side="right")
+                i = min(range(1, p), key=lambda i: max(
+                    0.0, i / p * n - hi, lo + 1 - i / p * n))
+                fixed.append(float(vals[min(n, max(1, round(i / p * n))) - 1]))
+            v["splits"] = sorted(set(fixed))
+
+    def sketch_broken(r):
+        # one split moved 10 records past its quantile's rank
+        sketch_repaired(r)
+        v = r["outputs"]["probe"]["sketch"][0]
+        x = f'"{v["name"]}"'
+        vals = np.sort(con.execute(
+            f"SELECT {x} FROM ({union}) WHERE {checks._clean(x, [-999.0])}"
+        ).fetchnumpy()[v["name"]])
+        v["splits"][0] = float(
+            vals[np.searchsorted(vals, v["splits"][0], side="right") + 9])
+
+    def verdict(result, name):
+        return next(ok for n, ok, _ in checks.run_probe_checks(
+            result, str(data)) if n == name)
+
+    failures = 0
+    for name, repair, corrupt in (
+            ("probe:psi_unscored", psi_repaired, psi_broken),
+            ("probe:sketch_eps", sketch_repaired, sketch_broken)):
+        fails_program = not verdict(sm, name)
+        fixed, broken = copy.deepcopy(sm), copy.deepcopy(sm)
+        repair(fixed)
+        corrupt(broken)
+        passes_fixed = verdict(fixed, name)
+        rejects = not verdict(broken, name)
+        good = passes_fixed and rejects
+        failures += not good
+        print(f"{'ok  ' if good else 'FAIL'} {name:26} fails on the program: "
+              f"{fails_program}; passes repaired: {passes_fixed}; rejects "
+              f"the corruption: {rejects}")
+    con.close()
+    return failures
 
 
 def main():
@@ -148,10 +221,11 @@ def main():
         failures += not good
         print(f"{'ok  ' if good else 'FAIL'} {name:26} passes on the run: "
               f"{passes_clean}; rejects the corruption: {rejects}")
+    failures += probe_cases(sm, sm_data)
     shutil.rmtree(scratch, ignore_errors=True)
     if failures:
         raise SystemExit(f"{failures} self-test case(s) failed")
-    print(f"all {len(cases)} corruptions rejected")
+    print(f"all {len(cases) + 2} corruptions rejected")
 
 
 if __name__ == "__main__":

@@ -9,31 +9,132 @@ import org.apache.spark.sql.SparkSession
 /** One timed operation of a round. */
 final case class OpRecord(name: String, round: Int, traced: Boolean,
                           startMs: Long, endMs: Long, seconds: Double,
-                          cpuSeconds: Double, error: Option[String]) {
+                          cpuSeconds: Double, jitSeconds: Double,
+                          gcSeconds: Double, error: Option[String]) {
   def ok: Boolean = error.isEmpty
 }
 
-/** CPU time of the JVM's Java threads (the driver, Spark's task threads
-  * and every other thread the program starts). HotSpot's JIT compiler and
-  * GC threads are not Java threads and are left out: their work depends on
-  * when the JIT happens to compile, not on the work measured. Time of a
-  * thread that ends between two readings is lost. */
-object JavaCpu {
-  private val mx = java.lang.management.ManagementFactory.getThreadMXBean
+/** CPU time of the whole process: every thread, including those that end
+  * between two readings (the driver, Spark's task threads, GC and VM
+  * threads), less the CPU of HotSpot's JIT compiler threads. The JIT's
+  * work follows when the compiler happens to run rather than the work
+  * measured, so it is read apart, per compiler thread, from
+  * /proc/self/task. HotSpot starts and ends compiler threads as the
+  * compile queue grows and drains, so a sampler reads them every 25 ms
+  * and keeps the last reading of each thread that ended: at most 25 ms of
+  * an ended compiler thread's CPU stays in the figure. The GC threads'
+  * share is read the same way and kept in the artifact. */
+object Cpu {
+  private val os = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  /** Linux reports per-thread CPU in USER_HZ ticks. */
+  private val TicksPerSecond = 100.0
+  private val SampleMs = 25L
 
-  def snapshot(): Map[Long, Long] =
-    mx.getAllThreadIds.map(id => id -> mx.getThreadCpuTime(id))
-      .filter(_._2 >= 0).toMap
+  /** Process CPU (ns) and the CPU ticks of all JIT and GC threads so far,
+    * those that ended included. */
+  final case class Reading(processNs: Long, jitTicks: Long, gcTicks: Long)
 
-  /** Seconds of CPU the Java threads used since `before`. */
-  def since(before: Map[Long, Long]): Double =
-    snapshot().map { case (id, t) => t - before.getOrElse(id, 0L) }.sum / 1e9
+  private def kindOf(comm: String): String =
+    if (comm.startsWith("C1 Compiler") || comm.startsWith("C2 Compiler")) "jit"
+    else if (comm.startsWith("GC Thread") || comm.startsWith("G1 ")) "gc"
+    else ""
 
+  /** (kind, CPU ticks) of a live thread. */
+  private def stat(tid: String): Option[(String, Long)] = scala.util.Try {
+    val src = scala.io.Source.fromFile(s"/proc/self/task/$tid/stat")
+    val st = try src.mkString finally src.close()
+    // the fields after the comm start at field 3 (state); utime and stime
+    // are fields 14 and 15
+    val f = st.substring(st.lastIndexOf(')') + 2).split(' ')
+    (kindOf(st.substring(st.indexOf('(') + 1, st.lastIndexOf(')'))),
+     f(11).toLong + f(12).toLong)
+  }.toOption
+
+  private val kinds = mutable.Map.empty[String, String]
+  private val last = mutable.Map.empty[String, Long]
+  private val ended = mutable.Map("jit" -> 0L, "gc" -> 0L)
+
+  private def retire(tid: String): Unit = {
+    last.remove(tid).foreach(t => ended(kinds(tid)) += t)
+    kinds.remove(tid)
+  }
+
+  private def sample(): Unit = synchronized {
+    val live = Option(new File("/proc/self/task").list()).toSeq.flatten.toSet
+    (kinds.keySet -- live).toList.foreach(retire)
+    live.foreach { tid =>
+      if (!kinds.contains(tid)) stat(tid).foreach { case (k, t) =>
+        kinds(tid) = k
+        if (k.nonEmpty) last(tid) = t
+      } else if (kinds(tid).nonEmpty) stat(tid) match {
+        // a thread id reused by another thread: start it afresh
+        case Some((k, t)) if k != kinds(tid) || t < last(tid) =>
+          retire(tid); kinds(tid) = k; if (k.nonEmpty) last(tid) = t
+        case Some((_, t)) => last(tid) = t
+        case None => retire(tid)
+      }
+    }
+  }
+
+  private lazy val sampler: Thread = {
+    val t = new Thread(() => while (true) { sample(); Thread.sleep(SampleMs) },
+                       "perfbench-cpu-sampler")
+    t.setDaemon(true)
+    t.start()
+    t
+  }
+
+  def read(): Reading = {
+    sampler
+    synchronized {
+      sample()
+      def total(k: String) =
+        ended(k) + last.collect { case (tid, t) if kinds(tid) == k => t }.sum
+      Reading(os.getProcessCpuTime, total("jit"), total("gc"))
+    }
+  }
+
+  /** (CPU seconds less the JIT's, JIT seconds, GC seconds) since `r0`. */
+  def since(r0: Reading): (Double, Double, Double) = {
+    val r1 = read()
+    val jit = (r1.jitTicks - r0.jitTicks) / TicksPerSecond
+    ((r1.processNs - r0.processNs) / 1e9 - jit, jit,
+     (r1.gcTicks - r0.gcTicks) / TicksPerSecond)
+  }
+
+  /** (wall seconds, CPU seconds less the JIT's) of `body`. */
   def timed(body: => Unit): (Double, Double) = {
     val t0 = System.nanoTime()
-    val c0 = snapshot()
+    val c0 = read()
     body
-    ((System.nanoTime() - t0) / 1e9, since(c0))
+    ((System.nanoTime() - t0) / 1e9, since(c0)._1)
+  }
+}
+
+/** The run artifact as JSON, rendered by json4s; non-finite doubles
+  * become null. */
+object Json {
+  import org.json4s._
+  import org.json4s.jackson.JsonMethods.{compact, render}
+
+  def apply(v: Any): String = compact(render(value(v)))
+
+  private def value(v: Any): JValue = v match {
+    case null | None => JNull
+    case Some(x) => value(x)
+    case s: String => JString(s)
+    case b: Boolean => JBool(b)
+    case d: Double => if (d.isNaN || d.isInfinite) JNull else JDouble(d)
+    case i: Int => JLong(i)
+    case l: Long => JLong(l)
+    case m: scala.collection.Map[_, _] =>
+      JObject(m.toList.map { case (k, x) => k.toString -> value(x) })
+    case a: Array[_] => JArray(a.toList.map(value))
+    case s: Iterable[_] => JArray(s.toList.map(value))
+    case p: Product => JArray(p.productIterator.toList.map(value))
+    case other => JString(other.toString)
   }
 }
 
@@ -48,11 +149,26 @@ final class Ops(spark: SparkSession) {
   /** false during set-up and warm-up: nothing is recorded then. */
   var recording = false
 
+  /** The tracer of a traced run, attached during traced rounds. */
+  var tracer: Option[Tracer] = None
+
+  /** Runs an op that enters no figure (the probe): outside the tracer,
+    * and recorded as untraced. */
+  def runUntimed(name: String)(body: => Unit): Unit = {
+    val wasTraced = traced
+    if (wasTraced) tracer.foreach(_.detach())
+    traced = false
+    try run(name)(body) finally {
+      traced = wasTraced
+      if (wasTraced) tracer.foreach(_.attach())
+    }
+  }
+
   def run(name: String)(body: => Unit): Unit = {
     val sc = spark.sparkContext
     sc.setJobGroup(s"$round:$name", name, interruptOnCancel = false)
     val ms0 = System.currentTimeMillis()
-    val cpu0 = JavaCpu.snapshot()
+    val cpu0 = Cpu.read()
     val t0 = System.nanoTime()
     val error = try { body; None } catch {
       case e: Throwable =>
@@ -60,12 +176,13 @@ final class Ops(spark: SparkSession) {
         Some(s"${e.getClass.getName}: ${e.getMessage}")
     } finally sc.clearJobGroup()
     val secs = (System.nanoTime() - t0) / 1e9
-    val cpu = JavaCpu.since(cpu0)
-    System.err.println(
-      f"[perfbench] round $round%d $name%s $secs%.3f s (cpu $cpu%.3f s)")
+    val (cpu, jit, gc) = Cpu.since(cpu0)
+    System.err.println(f"[perfbench] round $round%d $name%s $secs%.3f s " +
+                       f"(cpu $cpu%.2f s, of it gc $gc%.2f s; jit $jit%.2f s)")
     if (recording)
       records += OpRecord(name, round, traced, ms0,
-                          System.currentTimeMillis(), secs, cpu, error)
+                          System.currentTimeMillis(), secs, cpu, jit, gc,
+                          error)
   }
 
   def timedLayer(key: String)(body: => Unit): Unit = {
@@ -87,7 +204,6 @@ object Main {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
   }
 
-  private def timed(body: => Unit): (Double, Double) = JavaCpu.timed(body)
 
   /** The JVM's high-water resident set size, MiB (Linux VmHWM). */
   private def peakRssMb(): Double = {
@@ -129,7 +245,7 @@ object Main {
     val dataDir = a("data")
     val outDir = a("out")
     val cpus = a("cpus")
-    val setupRepeats = a.getOrElse("setup-repeats", "3").toInt
+    val setupRepeats = 3
 
     val tSession = System.nanoTime()
     val spark = SparkSession.builder()
@@ -157,10 +273,16 @@ object Main {
     }
     val ops = new Ops(spark)
 
-    val setups = (1 to setupRepeats).map(_ => timed(workload.setup()))
+    workload.prepare()
+    phase("prepared")
+    // the first set-up runs on a cold JIT and enters no figure; setup_s
+    // is the median of the three after it
+    workload.setup()
+    val setups = (1 to setupRepeats).map(_ => Cpu.timed(workload.setup()))
     phase("set-up done")
 
     val tracer = if (trace) Some(new Tracer(spark)) else None
+    ops.tracer = tracer
     val fingerprints = mutable.ArrayBuffer.empty[String]
     val tracedTimings = mutable.ArrayBuffer.empty[Map[String, Double]]
     ops.recording = true
@@ -200,7 +322,9 @@ object Main {
                                "fit_s" -> workload.fitOps))
         .map { case (m, names) => m -> median(perRound(names, traced)) }
         .toMap +
-        ("cpu_s" -> median(perRound(allOps, traced, _.cpuSeconds)))
+        ("cpu_s" -> median(perRound(allOps, traced, _.cpuSeconds))) +
+        ("jit_s" -> median(perRound(allOps, traced, _.jitSeconds))) +
+        ("gc_cpu_s" -> median(perRound(allOps, traced, _.gcSeconds)))
     val untraced = figures(traced = false)
     val traced = figures(traced = true)
     val coldRoundS = ops.records.filter(_.round == 0).map(_.seconds).sum
@@ -262,7 +386,8 @@ object Main {
       "errors" -> ops.records.flatMap(_.error).distinct,
       "ops" -> ops.records.map(o => Map("op" -> o.name, "round" -> o.round,
         "traced" -> o.traced, "seconds" -> o.seconds,
-        "cpu_seconds" -> o.cpuSeconds, "ok" -> o.ok)),
+        "cpu_seconds" -> o.cpuSeconds, "jit_seconds" -> o.jitSeconds,
+        "gc_seconds" -> o.gcSeconds, "ok" -> o.ok)),
       "cold_round_s" -> coldRoundS,
       "e2e_untraced" -> untraced, "e2e_traced" -> traced,
       "layers" -> layers,

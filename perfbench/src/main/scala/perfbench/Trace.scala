@@ -24,9 +24,6 @@ final class LayerTotals {
   def add(k: String, x: Double): Unit = synchronized {
     v(k) = v.getOrElse(k, 0.0) + x
   }
-  def max(k: String, x: Double): Unit = synchronized {
-    v(k) = math.max(v.getOrElse(k, 0.0), x)
-  }
   def get(k: String): Double = synchronized(v.getOrElse(k, 0.0))
 }
 

@@ -14,6 +14,8 @@ trait Workload {
   /** The ops that fit a model (their summed time is `fit_s`). */
   def fitOps: Seq[String]
   def setup(): Unit
+  /** Untimed preparation, once before the set-ups (default: none). */
+  def prepare(): Unit = ()
   def round(ops: Ops): Unit
   def outputs(): Map[String, Any]
   def fingerprint(): String
@@ -183,6 +185,10 @@ final class BatchFit(spark: SparkSession, dataDir: String) extends Workload {
 }
 
 object ScoreMonitor {
+  /** Variables of the probe scorecard: a numeric driver and a categorical
+    * variable that gets a level unseen in training in the drifted batch. */
+  val ProbeVariables: Seq[String] = Seq("h0", "c50_1")
+
   def scorecardDump(sc: FittedScorecard): Map[String, Any] = Map(
     "selected" -> sc.selected.toSeq,
     "base_intercept" -> sc.baseIntercept,
@@ -199,7 +205,13 @@ object ScoreMonitor {
   * sketches the training cohort; each round fits the scorecard and its
   * monitor on the training cohort, scores a drifted production batch to
   * parquet, runs the PSI and significance reports, and refreshes the
-  * sketch with the batch. */
+  * sketch with the batch.
+  *
+  * Each round also runs `probe`: the same monitoring and sketch refresh on
+  * a fixed cohort that does not depend on the seed, whose outputs are
+  * checked for two properties the program misses on that cohort (no
+  * unscored row in a score bin; sketch splits within eps of their
+  * quantile). It is kept out of every timing figure. */
 final class ScoreMonitor(spark: SparkSession, dataDir: String,
                          outDir: String) extends Workload {
   private var train: DataFrame = _
@@ -217,6 +229,13 @@ final class ScoreMonitor(spark: SparkSession, dataDir: String,
   private var sketchFits: Map[String, FittedOptimalBinning] = Map.empty
   val scoresPath = s"$outDir/scores.parquet"
 
+  private var probeTrain: DataFrame = _
+  private var probeBatch: DataFrame = _
+  private var probeScorecard: FittedScorecard = _
+  private var probeNumeric: Seq[String] = Nil
+  private var probeBaseSketch: BinningProcessSketch = _
+  private var probeOut: Map[String, Any] = Map.empty
+
   val metrics: Seq[(String, Seq[String])] = Seq(
     "scorecard_fit_s" -> Seq("scorecard_fit"),
     "score_s" -> Seq("score"),
@@ -232,6 +251,19 @@ final class ScoreMonitor(spark: SparkSession, dataDir: String,
     vars = new CreditTable(train)
     baseSketch = newSketch()
     baseSketch.add(train, "target")
+  }
+
+  /** The probe's fixed cohort, scorecard and base sketch: built once and
+    * kept out of the timed set-up, since the probe is kept out of every
+    * timing figure. */
+  override def prepare(): Unit = {
+    probeTrain = spark.read.parquet(s"$dataDir/probe/train.parquet")
+    probeBatch = spark.read.parquet(s"$dataDir/probe/batch.parquet")
+    probeScorecard = Scorecard.fit(probeTrain, ScoreMonitor.ProbeVariables,
+                                   "target")
+    probeNumeric = new CreditTable(probeTrain).numeric
+    probeBaseSketch = new BinningProcessSketch(probeNumeric, config, eps)
+    probeBaseSketch.add(probeTrain, "target")
   }
 
   private def newSketch() =
@@ -267,6 +299,25 @@ final class ScoreMonitor(spark: SparkSession, dataDir: String,
         sketchFits = sketch.solveAll()
       }
     }
+    ops.runUntimed("probe") {
+      val rows = new ScorecardMonitoring(probeScorecard, psiNBins = 20)
+        .psiTable(probeTrain, probeBatch).collect()
+      val scores = probeScorecard.score(probeBatch).collect()
+        .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
+      val sk = new BinningProcessSketch(probeNumeric, config, eps)
+      sk.merge(probeBaseSketch)
+      sk.add(probeBatch, "target")
+      val fits = sk.solveAll()
+      probeOut = Map(
+        "psi_rows" -> rows.toSeq.map(r => Map(
+          "bin" -> r.getAs[Any]("bin"), "count_e" -> r.getAs[Double]("count_e"),
+          "count_a" -> r.getAs[Double]("count_a"))),
+        "scored" -> scores.count(x => !x.isNaN),
+        "unscored" -> scores.count(_.isNaN),
+        "sketch" -> probeNumeric.map(v => Map(
+          "name" -> v, "n" -> sk.sketch(v).sketch.n,
+          "status" -> fits(v).status, "splits" -> fits(v).splits)))
+    }
   }
 
   def fitTimings(): Seq[Map[String, Double]] =
@@ -296,10 +347,12 @@ final class ScoreMonitor(spark: SparkSession, dataDir: String,
         val f = sketchFits(v)
         Map("name" -> v, "t_records" -> f.table.tRecords,
             "t_event" -> f.table.tEvent, "status" -> f.status)
-      }))
+      }),
+    "probe" -> (probeOut + ("eps" -> eps) +
+                ("max_n_prebins" -> config.maxNPrebins)))
 
   def fingerprint(): String = Json(Seq(
     scorecard.pointsTable.map(_.points).toSeq, psiRows.map(_("psi")), significance.map(_("p")),
     vars.variables.map(v => (sketchFits(v).splits.toSeq,
-                             sketchFits(v).table.iv))))
+                             sketchFits(v).table.iv)), probeOut))
 }
